@@ -674,7 +674,10 @@ object GraftOps {
     * targets). */
   private[api] def indexSketch(df: DataFrame, idCol: String,
       textCol: String, indexDir: String): DataFrame = {
-    val meta = fingerprintMeta(df.sparkSession, indexDir)
+    // the index's recorded sketch shape: immutable across appends and
+    // compacts, so the latest snapshot's memoized meta row agrees
+    val meta = metaRowOf(df.sparkSession, indexDir, indexSnapshot(
+      df.sparkSession, indexDir, "fingerprint", "fingerprintBuild"))
     minhashDocSketch(df, idCol, textCol, meta.getInt(0), meta.getInt(1),
         spread = false)
       .localCheckpoint(false)
@@ -870,15 +873,6 @@ object GraftOps {
             "release's snapshot protocol"
         else s"no $what index at $indexDir — build one with $builder first")
     }
-
-  /** The index's recorded sketch shape (from the latest snapshot; the
-    * shape is immutable across appends/compacts, so any snapshot
-    * agrees). */
-  private def fingerprintMeta(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): org.apache.spark.sql.Row =
-    IndexStore.readTable(spark, indexDir,
-      indexSnapshot(spark, indexDir, "fingerprint", "fingerprintBuild"),
-      "meta").head()
 
   /** Compact a [[fingerprintBuild]] index: every [[fingerprintAppend]]
     * adds at least one segment (≥ 1 parquet file) per table, so a
@@ -3108,12 +3102,13 @@ object GraftOps {
       throw new IllegalArgumentException(
         s"bm25AgainstCorpus: no index at $indexDir — build one with " +
           "bm25IndexBuild first"))
-    // meta + folded stats memoized per committed version (idxMemo — the
-    // serving-path convention): both are version-pinned scalars, so a
-    // repeat probe of an unmoved index pays zero metadata jobs
+    // meta + folded stats memoized per committed version
+    // (IndexStore.memo — the serving-path convention): both are
+    // version-pinned scalars, so a repeat probe of an unmoved index
+    // pays zero metadata jobs
     val nBuckets = metaRowOf(spark, indexDir, snap).getInt(0)
     val (nDocs, sumDl) =
-      idxMemo(spark, indexDir, snap.version, "stats") {
+      IndexStore.memo(spark, indexDir, snap.version, "stats") {
         val st = IndexStore.readTable(spark, indexDir, snap, "stats")
           .agg(coalesce(sum("n_docs"), lit(0L)),
             coalesce(sum("sum_dl"), lit(0L))).head()
@@ -3858,59 +3853,6 @@ object GraftOps {
         coalesce(size(col("emb")).cast("string"), lit("NULL")))))
       .otherwise(col("emb")))
 
-  /** SERVING-PATH METADATA MEMO (the SURVEY §3.2 sanctioned-exception
-    * convention, the persisted-index twin of TextOps' doc-components
-    * memo): every probe of a persisted index collects the same bounded
-    * driver-side quantizer metadata — centroids (nLists rows),
-    * PQ codebooks (m × ksub rows), the meta row, bm25's two stats
-    * scalars — which is correct but the wrong shape for a query-serving
-    * deployment: ~4 small Spark jobs per call, re-read although the
-    * index version has not moved (r15 VERDICT residual (b), measured as
-    * most of q146:search's 1.41 s). Entries are keyed by (session,
-    * indexDir, COMMITTED VERSION, table) — a fresh commit is a fresh
-    * version, so staleness is impossible by keying, not by
-    * invalidation hooks (spec-pinned: a rebuild at the same dir must be
-    * observed by the next search). Values are plain driver-side arrays
-    * (no checkpoint blocks to release), LRU-bounded; an out-of-band
-    * delete of a store's `_manifests` history followed by a rebuild
-    * that REUSES a version number within one session is outside the
-    * store contract (the same stance as rm -rf mid-query). Keys hold
-    * the session strongly (the docCompCache stance): a stopped
-    * session's entries age out under the LRU bound — 64 small arrays,
-    * not frames — rather than via a lifecycle listener. */
-  private val IdxMetaCacheMax = 64
-  private val idxMetaCache = new java.util.LinkedHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int, String), Any]()
-  private def idxMemo[T](spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, version: Int, tag: String)(build: => T): T = {
-    val k = (spark, indexDir, version, tag)
-    val hit = idxMetaCache.synchronized {
-      if (idxMetaCache.containsKey(k)) {
-        val v = idxMetaCache.remove(k) // re-insert = LRU touch
-        idxMetaCache.put(k, v)
-        Some(v.asInstanceOf[T])
-      } else None
-    }
-    hit.getOrElse {
-      // the build (a bounded Spark collect) runs OUTSIDE the lock — a
-      // cold read of one index must not become tail latency for a warm
-      // probe of another. Two racers may both build; the values are
-      // idempotent reads of an immutable committed version, so
-      // last-put-wins is benign.
-      val v = build
-      idxMetaCache.synchronized {
-        idxMetaCache.put(k, v)
-        while (idxMetaCache.size > IdxMetaCacheMax) {
-          val it = idxMetaCache.keySet.iterator
-          it.next(); it.remove()
-        }
-      }
-      v
-    }
-  }
-  private[graft] def idxMetaClear(): Unit =
-    idxMetaCache.synchronized(idxMetaCache.clear())
-
   /** A snapshot's meta-table head row, memoized by its OWNING SEGMENT
     * DIR (immutable once written; appends carry the meta segment list
     * unchanged, so — unlike a per-version key — the memo hits across a
@@ -3924,7 +3866,7 @@ object GraftOps {
     val segs = snap.tables.getOrElse("meta", Seq.empty)
     if (segs.size != 1)
       IndexStore.readTable(spark, indexDir, snap, "meta").head()
-    else idxMemo(spark, indexDir, IndexStore.versionOf(segs.head),
+    else IndexStore.memo(spark, indexDir, IndexStore.versionOf(segs.head),
         "metarow") {
       IndexStore.readTable(spark, indexDir, snap, "meta").head()
     }
@@ -3940,17 +3882,17 @@ object GraftOps {
     probes: DataFrame)
 
   /** PREPARED-SEARCH memo (VERDICT r16 task 3 — the serving path's
-    * second half): [[idxMemo]] already pins the quantizer metadata per
-    * committed version, but every probe of an UNMOVED index still paid
-    * two query-side jobs — materializing the probe frame (coarse
-    * assignment + per-query LUT for PQ; term explode for BM25) and
-    * collecting its touched-bucket ids. A query-serving deployment
-    * replays the same query plan against the same index version over
-    * and over, so this memoizes BOTH, keyed by (session, indexDir,
-    * COMMITTED VERSION, dial tag, canonicalized analyzed plan of the
-    * caller's query frame):
-    *  - staleness is impossible BY KEYING, exactly idxMemo's argument —
-    *    a fresh commit is a fresh version;
+    * second half): [[IndexStore.memo]] already pins the quantizer
+    * metadata per committed version, but every probe of an UNMOVED
+    * index still paid two query-side jobs — materializing the probe
+    * frame (coarse assignment + per-query LUT for PQ; term explode for
+    * BM25) and collecting its touched-bucket ids. A query-serving
+    * deployment replays the same query plan against the same index
+    * version over and over, so this memoizes BOTH, keyed by (session,
+    * indexDir, COMMITTED VERSION, dial tag, canonicalized analyzed plan
+    * of the caller's query frame):
+    *  - staleness is impossible BY KEYING, exactly IndexStore.memo's
+    *    argument — a fresh commit is a fresh version;
     *  - two textually different but semantically equal plans share an
     *    entry (Spark's own exchange-reuse equivalence, via
     *    `sameResult`); a hash collision cannot serve wrong buckets
@@ -3974,7 +3916,7 @@ object GraftOps {
     else {
       val canon = analyzed.canonicalized
       val key = s"$tag:${canon.hashCode()}"
-      val hit = idxMemo(spark, indexDir, version, key) {
+      val hit = IndexStore.memo(spark, indexDir, version, key) {
         val (touched, probes) = build
         PreparedProbes(canon, touched, probes)
       }
@@ -3991,13 +3933,13 @@ object GraftOps {
       indexSnapshot(spark, indexDir, "IVF", "ivfBuild"))
 
   /** [[readCentroids]] against an already-resolved snapshot, memoized
-    * per committed version ([[idxMemo]]). An existing-but-EMPTY
+    * per committed version ([[IndexStore.memo]]). An existing-but-EMPTY
     * centroids table fails with the same loud no-index message as a
     * missing one — centers(0) downstream would otherwise throw a raw
     * IndexOutOfBounds that reads like a data bug. */
   private def readCentroidsSnap(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, snap: IndexStore.Snapshot): Array[Array[Double]] =
-    idxMemo(spark, indexDir, snap.version, "centroids") {
+    IndexStore.memo(spark, indexDir, snap.version, "centroids") {
       val cs = IndexStore.readTable(spark, indexDir, snap, "centroids")
         .orderBy("lid").collect().map(_.getSeq[Double](1).toArray)
       require(cs.nonEmpty, s"no IVF index at $indexDir — the centroids " +
@@ -4354,11 +4296,11 @@ object GraftOps {
 
   /** A persisted IVF-PQ index's codebooks, driver-side (m × ksub rows
     * of metadata — the same bounded collect every search performs),
-    * memoized per committed version ([[idxMemo]]). */
+    * memoized per committed version ([[IndexStore.memo]]). */
   private def readCodebooksSnap(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, snap: IndexStore.Snapshot, m: Int,
       ksub: Int): Array[Array[Array[Double]]] =
-    idxMemo(spark, indexDir, snap.version, "codebooks") {
+    IndexStore.memo(spark, indexDir, snap.version, "codebooks") {
       val rows = IndexStore.readTable(spark, indexDir, snap, "codebooks")
         .collect().map(r => ((r.getInt(0), r.getInt(1)),
           r.getSeq[Double](2).toArray)).toMap
@@ -4369,13 +4311,13 @@ object GraftOps {
     }
 
   /** An IVF-PQ index's (m, ksub, dim) meta row, memoized per committed
-    * version ([[idxMemo]]) — read by every search, shortlist, and
-    * append. Gates the on-disk encoding stamp ([[IvfPqEncoding]]): an
+    * version ([[IndexStore.memo]]) — read by every search, shortlist,
+    * and append. Gates the on-disk encoding stamp ([[IvfPqEncoding]]): an
     * index persisted under a different (or pre-stamp) scheme fails
     * loudly here instead of mis-ranking silently. */
   private def readIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, snap: IndexStore.Snapshot): (Int, Int, Int) =
-    idxMemo(spark, indexDir, snap.version, "meta") {
+    IndexStore.memo(spark, indexDir, snap.version, "meta") {
       val mt = IndexStore.readTable(spark, indexDir, snap, "meta")
       val enc = if (mt.columns.contains("enc"))
         mt.select("enc").head().getString(0) else "<unstamped>"
@@ -6310,10 +6252,13 @@ object GraftOps {
     val table = sideTable(side, op)
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
+    swallowReplay(IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
       val base = baseOpt.getOrElse(throw new IllegalArgumentException(
         s"$op: no index at $indexDir — build one with dsirStatsBuild " +
           "first"))
+      // in-commit replay gate ([[skipIfReplayed]]): a re-delivered
+      // batch would sum its counts into the store a second time
+      skipIfReplayed(base, batchId, op, negate)
       val m = metaRowOf(spark, indexDir, base)
       val fb = if (m.getInt(2) == 0) None else Some(m.getInt(2))
       val pinned = writeBucketedOrEmpty(dsirCountDelta(batch, idCol,
@@ -6329,11 +6274,8 @@ object GraftOps {
       (base.tables
         + (table -> (base.tables(table) :+ v))
         + ("totals" -> (base.tables("totals") :+ v)),
-        base.props ++ batchId.map(b => Map(
-          "last_batch" -> b.toString,
-          "last_batch_base" -> base.version.toString))
-          .getOrElse(Map.empty))
-    }
+        base.props ++ batchProps(batchId, base.version, negate))
+    })
     ()
   }
 
@@ -6682,9 +6624,11 @@ object GraftOps {
       batchId: Option[Long]): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
+    swallowReplay(IndexStore.commitWithRetry(spark, indexDir, op) { (baseOpt, v) =>
       val base = baseOpt.getOrElse(throw new IllegalArgumentException(
         s"$op: no index at $indexDir — build one with lmStatsBuild first"))
+      // in-commit replay gate ([[skipIfReplayed]]), as dsirStatsDelta's
+      skipIfReplayed(base, batchId, op, negate)
       val m = metaRowOf(spark, indexDir, base)
       val nBuckets = m.getInt(1)
       inParallel(
@@ -6702,11 +6646,8 @@ object GraftOps {
         + ("uni_counts" -> (base.tables("uni_counts") :+ v))
         + ("big_counts" -> (base.tables("big_counts") :+ v))
         + ("totals" -> (base.tables("totals") :+ v)),
-        base.props ++ batchId.map(b => Map(
-          "last_batch" -> b.toString,
-          "last_batch_base" -> base.version.toString))
-          .getOrElse(Map.empty))
-    }
+        base.props ++ batchProps(batchId, base.version, negate))
+    })
     ()
   }
 
@@ -6788,14 +6729,14 @@ object GraftOps {
     val segsAfter = uniSegs.filter(IndexStore.versionOf(_) > baseVer)
     val v: Long = if (segsAfter.isEmpty) vBase else {
       val deltaUni = segsAfter
-        .map(sv => spark.read.parquet(s"$indexDir/$sv/uni_counts"))
+        .map(sv => IndexStore.readSegment(spark, indexDir, sv, "uni_counts"))
         .reduce(_.unionByName(_))
         .groupBy("w").agg(sum("cnt").as("d"), max("bucket").as("bucket"))
         .localCheckpoint(false)
       val touched = deltaUni.select("bucket").distinct()
         .collect().map(_.getInt(0)).toSeq
       val baseUni = uniSegs.filter(IndexStore.versionOf(_) <= baseVer)
-        .map(sv => spark.read.parquet(s"$indexDir/$sv/uni_counts"))
+        .map(sv => IndexStore.readSegment(spark, indexDir, sv, "uni_counts"))
         .reduce(_.unionByName(_))
         .filter(col("bucket").isin(touched: _*))
         .groupBy("w").agg(sum("cnt").as("o"))

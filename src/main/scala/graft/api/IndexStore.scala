@@ -59,7 +59,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * if any, is cleared automatically by the next successful claim of
   * that version). Version numbers form an unbroken chain; every
   * commit derives from its immediate predecessor — no lost updates by
-  * construction. */
+  * construction.
+  *
+  * Reads resolve each segment's schema once per session: the first
+  * read of a published segment infers it (one footer-reading Spark
+  * job), later reads pass it to `spark.read.schema(...)` and launch
+  * none ([[readSegment]]). The memo ([[memo]]) is per segment, never
+  * per table, because segments of one table may differ in column
+  * types; it holds only segments a published manifest lists; and a
+  * version number reused within one session (the store dir or its
+  * `_manifests` deleted out of band, then rebuilt) is outside its
+  * contract. The profile store reads its version dirs through the
+  * same path. */
 private[graft] object IndexStore {
 
   /** One committed snapshot: manifest version, commit properties
@@ -97,15 +108,13 @@ private[graft] object IndexStore {
     * reads (a single-segment table reads plain — the common built-once
     * case keeps its unchanged scan plan). Filters a caller applies on
     * top push through the union into every segment scan, so partition
-    * pruning (IVF's `bucket IN (probed)`) holds per segment. */
+    * pruning (IVF's `bucket IN (probed)`) holds per segment. Each
+    * segment's schema resolves once per session ([[readSegment]]). */
   def readTable(spark: SparkSession, indexDir: String, snap: Snapshot,
-      table: String): DataFrame = {
-    val segs = snap.tables.getOrElse(table, throw new IllegalStateException(
-      s"index at $indexDir: manifest v${snap.version} records no table " +
-        s"'$table' — the directory does not hold this kind of index"))
-    segs.map(v => spark.read.parquet(s"$indexDir/$v/$table"))
+      table: String): DataFrame =
+    segmentsOf(indexDir, snap, table)
+      .map(v => readSegment(spark, indexDir, v, table))
       .reduce(_.unionByName(_))
-  }
 
   /** [[readTable]] with every row tagged (`segCol`, int) by the
     * manifest version of the segment it lives in — the SEQUENCE NUMBER
@@ -117,13 +126,92 @@ private[graft] object IndexStore {
     * caller filters on data columns still push into every segment scan
     * unchanged. */
   def readTableTagged(spark: SparkSession, indexDir: String, snap: Snapshot,
-      table: String, segCol: String): DataFrame = {
-    val segs = snap.tables.getOrElse(table, throw new IllegalStateException(
-      s"index at $indexDir: manifest v${snap.version} records no table " +
-        s"'$table' — the directory does not hold this kind of index"))
-    segs.map(v => spark.read.parquet(s"$indexDir/$v/$table")
+      table: String, segCol: String): DataFrame =
+    segmentsOf(indexDir, snap, table)
+      .map(v => readSegment(spark, indexDir, v, table)
         .withColumn(segCol, org.apache.spark.sql.functions.lit(versionOf(v))))
       .reduce(_.unionByName(_))
+
+  private def segmentsOf(indexDir: String, snap: Snapshot,
+      table: String): Seq[String] =
+    snap.tables.getOrElse(table, throw new IllegalStateException(
+      s"index at $indexDir: manifest v${snap.version} records no table " +
+        s"'$table' — the directory does not hold this kind of index"))
+
+  /** One PUBLISHED segment `storeDir/vdir/table` (`table` empty: the
+    * version dir itself — the profile store's layout). The first read
+    * in a session infers the schema — a Spark job that opens a parquet
+    * footer — and memoizes it ([[memo]], keyed by the segment's
+    * version and table); later reads pass it to
+    * `spark.read.schema(...)` and launch no job. Per SEGMENT, never per
+    * table: an int-id build followed by a long-id append leaves
+    * segments of one table with different column types, which
+    * `unionByName` widens. Callers pass only segments a published
+    * manifest lists — a writer reading its own CLAIMED version reads
+    * plain, because a failed writer's version can be claimed (and
+    * written with another schema) again. */
+  private[graft] def readSegment(spark: SparkSession, storeDir: String,
+      vdir: String, table: String): DataFrame = {
+    val path =
+      if (table.isEmpty) s"$storeDir/$vdir" else s"$storeDir/$vdir/$table"
+    val schema = memo(spark, storeDir, versionOf(vdir), s"schema/$table") {
+      spark.read.parquet(path).schema
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** SESSION METADATA MEMO for the persisted stores — this object's
+    * index families and [[PortraitOps]]' profile store. Holds what a
+    * reader would otherwise re-derive with a Spark job on every call
+    * although the committed state has not moved: segment schemas
+    * ([[readSegment]]), meta rows ([[GraftOps.metaRowOf]]), quantizer
+    * metadata (centroids, PQ codebooks, bm25's stats scalars) and
+    * prepared probe sides. Keyed by (session, store dir, VERSION, tag):
+    * a fresh commit is a fresh version and segments are immutable once
+    * published, so staleness is impossible by keying, not by
+    * invalidation hooks (spec-pinned: a rebuild at the same dir must be
+    * observed by the next search). The contract:
+    *  - only state a PUBLISHED manifest references is memoized — a
+    *    claimed, unpublished version can fail and be claimed again;
+    *  - an out-of-band delete of a store's `_manifests` history (or of
+    *    the whole dir) followed by a rebuild that REUSES a version
+    *    number within one session is outside it (the same stance as
+    *    rm -rf mid-query).
+    * Values are plain driver-side objects (no checkpoint blocks to
+    * release, apart from prepared probes, which the ContextCleaner
+    * reclaims on eviction), LRU-bounded. Keys hold the session
+    * strongly: a stopped session's entries age out under the LRU
+    * bound — 64 small values, not frames — rather than via a lifecycle
+    * listener. */
+  private val MemoMax = 64
+  private val memoCache = new java.util.LinkedHashMap[
+    (SparkSession, String, Int, String), Any]()
+  private[graft] def memo[T](spark: SparkSession, storeDir: String,
+      version: Int, tag: String)(build: => T): T = {
+    val k = (spark, storeDir, version, tag)
+    val hit = memoCache.synchronized {
+      if (memoCache.containsKey(k)) {
+        val v = memoCache.remove(k) // re-insert = LRU touch
+        memoCache.put(k, v)
+        Some(v.asInstanceOf[T])
+      } else None
+    }
+    hit.getOrElse {
+      // the build (a bounded Spark job) runs OUTSIDE the lock — a cold
+      // read of one store must not become tail latency for a warm read
+      // of another. Two racers may both build; the values are
+      // idempotent reads of an immutable committed version, so
+      // last-put-wins is benign.
+      val v = build
+      memoCache.synchronized {
+        memoCache.put(k, v)
+        while (memoCache.size > MemoMax) {
+          val it = memoCache.keySet.iterator
+          it.next(); it.remove()
+        }
+      }
+      v
+    }
   }
 
   /** Commit one new version. `write` receives the base snapshot (None

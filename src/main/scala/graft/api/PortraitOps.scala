@@ -680,14 +680,18 @@ object PortraitOps {
     * EMPTY map (a [[profileDelete]] erased every profile) fails loudly:
     * with no live version dir there is no schema to produce an empty
     * frame from — drop the table dir, or upsert to restart the chain
-    * (the next upsert writes fresh buckets as day 0). */
+    * (the next upsert writes fresh buckets as day 0). Every map passed
+    * here comes from a published manifest, so each version dir's schema
+    * resolves once per session ([[IndexStore.readSegment]]'s memo and
+    * contract — a dropped table dir restarted within one session
+    * reuses version numbers, which that contract excludes). */
   private def readBuckets(spark: SparkSession, tableDir: String,
       buckets: Map[Int, String]): DataFrame = {
     if (buckets.isEmpty) throw new IllegalStateException(
       s"profile table $tableDir holds no live buckets (every profile " +
         "was deleted) — drop the table directory, or upsert to restart")
     buckets.groupBy(_._2).toSeq.sortBy(_._1).map { case (vdir, bs) =>
-      spark.read.parquet(s"$tableDir/$vdir")
+      IndexStore.readSegment(spark, tableDir, vdir, "")
         .filter(col("bucket").isin(bs.keys.toSeq: _*))
     }.reduce(_.unionByName(_))
   }

@@ -63,4 +63,48 @@ class ReplayGateSpec extends AnyFunSuite {
       })
     assert(!reachedRetract && IndexStore.resolve(s, dir).get.version === v2)
   }
+
+  test("a re-delivered dsirStatsAppend / lmStatsAppend with the same " +
+    "batchId is a no-op: counts, totals and the manifest version are " +
+    "unchanged") {
+    val s = spark
+    import s.implicits._
+    // every table's rows, order-free: a second summed delta would add a
+    // segment (and its rows) to the count and totals tables
+    def state(dir: String, tables: Seq[String]) = {
+      val snap = IndexStore.resolve(s, dir).get
+      (snap.version, tables.map(t => t ->
+        IndexStore.readTable(s, dir, snap, t).collect().map(_.toString)
+          .sorted.toSeq).toMap)
+    }
+    val dsir = java.nio.file.Files.createTempDirectory("graft_gate_dsir_")
+      .toString
+    GraftOps.dsirStatsBuild(Seq((1L, "a b c"), (2L, "b c d"))
+        .toDF("id", "txt"), "id", "txt", Seq("a b x").toDF("txt"), "txt",
+      dsir, nBuckets = 4)
+    val dsirBatch = Seq((3L, "c d e"), (4L, "a a b")).toDF("id", "txt")
+    GraftOps.dsirStatsAppend(dsirBatch, "id", "txt", dsir,
+      batchId = Some(5L))
+    val dsirTables = Seq("raw_counts", "tgt_counts", "totals")
+    val dsirBefore = state(dsir, dsirTables)
+    GraftOps.dsirStatsAppend(dsirBatch, "id", "txt", dsir,
+      batchId = Some(5L))
+    assert(state(dsir, dsirTables) === dsirBefore,
+      "a replayed dsir append must not sum its counts a second time")
+
+    val lm = java.nio.file.Files.createTempDirectory("graft_gate_lm_")
+      .toString
+    GraftOps.lmStatsBuild(Seq("aa bb cc aa bb").toDF("txt"), "txt", lm,
+      nBuckets = 4)
+    val lmBatch = Seq("xx yy zz xx").toDF("txt")
+    GraftOps.lmStatsAppend(lmBatch, "txt", lm, batchId = Some(5L))
+    val lmTables = Seq("uni_counts", "big_counts", "totals")
+    val lmBefore = state(lm, lmTables)
+    GraftOps.lmStatsAppend(lmBatch, "txt", lm, batchId = Some(5L))
+    assert(state(lm, lmTables) === lmBefore,
+      "a replayed lm append must not sum its counts a second time")
+    // the next batch still commits
+    GraftOps.lmStatsAppend(lmBatch, "txt", lm, batchId = Some(6L))
+    assert(IndexStore.resolve(s, lm).get.version === lmBefore._1 + 1)
+  }
 }
